@@ -2,6 +2,7 @@ package graft
 
 import graft.expr.SsisExprCompiler
 import graft.expr.SsisExprCompiler.Env
+import graft.ops.Staging.tempDirCleanedOnExit
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -16,31 +17,6 @@ import org.apache.spark.sql.types._
   */
 object QueriesRelational {
   import Tables._
-
-  /** Temp dirs for query fixtures (q38 CSV round-trip, q52 ForEach-File
-    * parts), deleted on JVM exit: the frames a query returns read these
-    * files LAZILY, so eager deletion would break the caller — but runs
-    * must not accumulate orphan dirs in tmpdir either (the q50 staging
-    * lesson: every on-disk artifact needs a lifecycle). ONE shutdown hook
-    * drains the whole registry — a hook per call would grow the JVM's
-    * hook set with every invocation in a long-lived driver. */
-  private val exitCleanupDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
-  private lazy val exitCleanupHook: Unit = {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(): Unit
-      }
-      exitCleanupDirs.forEach(p => rm(p.toFile))
-    }))
-  }
-  private[graft] def tempDirCleanedOnExit(prefix: String): java.nio.file.Path = {
-    exitCleanupHook
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
-    exitCleanupDirs.add(dir): Unit
-    dir
-  }
 
   /** Shared scaffold for the dtsx-package gate queries (q51/q52/q53):
     * parse the resource, optionally override variable literals (the
@@ -3673,34 +3649,15 @@ object QueriesRelational {
     * The only shuffle in the whole query is the final low-cardinality
     * re-aggregation. Oracle = the plain join: bucketing must be invisible
     * to results, exactly like q46's salting. */
-  /** Staging identity for q50: the CONTENT of the two input tables
-    * (paths + sizes + mtimes, digested). Unchanged data → same key →
-    * staged files legally reused across applications (a fresh app pays a
-    * metadata-only external CREATE TABLE, not a rewrite); changed data →
-    * new key, and the stale staging for this dataset is deleted. */
-  def q50StagingNames(dir: String): (String, String, java.io.File) = {
-    val key = graft.ops.Bucketing.datasetKey(
-      dir, Seq("lineitem.parquet", "orders.parquet"))
-    val stage = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_bucketed_$key")
-    (s"graft_b_lineitem_$key", s"graft_b_orders_$key", stage)
-  }
-
   def q50_bucketed_join(spark: SparkSession, dir: String): DataFrame = {
-    val (lTable, oTable, stage) = q50StagingNames(dir)
-    graft.ops.Bucketing.cleanupStale(stage.getParentFile, dir, stage.getName)
-    graft.ops.Bucketing.writeSourceMarker(stage, dir)
     val nb = 8
-    graft.ops.Bucketing.ensureStaged(spark,
-      lineitem(spark, dir).select(col("l_orderkey"), col("l_quantity")),
-      lTable, new java.io.File(stage, "lineitem").getAbsolutePath,
-      nb, "l_orderkey")
-    graft.ops.Bucketing.ensureStaged(spark,
-      orders(spark, dir).select(col("o_orderkey"), col("o_orderpriority")),
-      oTable, new java.io.File(stage, "orders").getAbsolutePath,
-      nb, "o_orderkey")
-    graft.ops.Bucketing
-      .bucketedJoin(spark, lTable, oTable, "l_orderkey", "o_orderkey")
+    val l = graft.ops.Staging.table(spark, "bucketed_lineitem", dir,
+        Seq("lineitem.parquet"), nb, "l_orderkey")(
+      lineitem(spark, dir).select(col("l_orderkey"), col("l_quantity")))
+    val o = graft.ops.Staging.table(spark, "bucketed_orders", dir,
+        Seq("orders.parquet"), nb, "o_orderkey")(
+      orders(spark, dir).select(col("o_orderkey"), col("o_orderpriority")))
+    graft.ops.Bucketing.bucketedJoin(l, o, "l_orderkey", "o_orderkey")
       .groupBy(col("o_orderpriority"))
       .agg(
         sum(col("l_quantity").cast(Money)).cast(DoubleType).as("sum_qty"),

@@ -38,13 +38,9 @@ object QueriesStreaming {
     * In production this is just `readStream.parquet(tableDir)`.
     * `copies > 1` stages the SAME file that many times — a deliberately
     * duplicated (at-least-once) stream for the dedup gate (q55).
-    * Staging is cached per (dir, copies): bench iteration loops must not
-    * re-copy the file per call or bill that I/O to the measured run. The
-    * event-time derivation is Tables.withEventTimeCols — the SAME
+    * Staging is cached per (dir, copies) ([[graft.ops.Staging.perJvm]]).
+    * The event-time derivation is Tables.withEventTimeCols — the SAME
     * definition the batch twins read through (parity is the gate). */
-  private val stagedEvents =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), java.nio.file.Path]()
-
   private def eventsStream(spark: SparkSession, dir: String,
       copies: Int = 1): DataFrame = {
     // same best-effort legacy enablement as Tables.eventsNs: ≤4.0 needs it
@@ -52,19 +48,17 @@ object QueriesStreaming {
     // withEventTimeCols handles both read shapes)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val src = java.nio.file.Path.of(s"$dir/events.parquet")
-    val stage = stagedEvents.computeIfAbsent((dir, copies), _ => {
-      val p = QueriesRelational.tempDirCleanedOnExit("graft-events-stream")
+    val stage = graft.ops.Staging.perJvm("graft-events-stream", (dir, copies)) { p =>
       (1 to copies).foreach(i =>
         java.nio.file.Files.copy(src, p.resolve(s"events_$i.parquet")))
-      p
-    })
+    }
     val schema = spark.read.parquet(src.toString).schema
     Tables.withEventTimeCols(
       StreamingOps.fileStream(spark, stage.toString, schema))
   }
 
   private def ckpt(): String =
-    QueriesRelational.tempDirCleanedOnExit("graft-ckpt").toString
+    graft.ops.Staging.tempDirCleanedOnExit("graft-ckpt").toString
 
   /** Streaming tumbling-window aggregate over the drained events stream —
     * same windows, same exact-decimal sums, same oracle as batch q30. */
@@ -251,19 +245,13 @@ object QueriesStreaming {
   }
 
   /** Staged copy of the x40/x42 document delta (ids ≡7 mod 10) for the
-    * FileStreamSource, cached per testdata dir (same lifecycle as
-    * [[stagedEvents]]). */
-  private val stagedDocsDelta =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-
+    * FileStreamSource, cached per testdata dir. */
   private def docsDeltaStream(spark: SparkSession, dir: String): DataFrame = {
-    val stage = stagedDocsDelta.computeIfAbsent(dir, _ => {
-      val p = QueriesRelational.tempDirCleanedOnExit("graft-docs-delta")
+    val stage = graft.ops.Staging.perJvm("graft-docs-delta", dir) { p =>
       Tables.documents(spark, dir)
         .filter(pmod(col("doc_id"), lit(10)) === 7)
         .write.mode("overwrite").parquet(p.toString)
-      p
-    })
+    }
     val schema = spark.read.parquet(stage.toString).schema
     StreamingOps.fileStream(spark, stage.toString, schema)
   }
@@ -303,15 +291,11 @@ object QueriesStreaming {
   }
 
   /** Staged two-wave CDC feed parquet for the FileStreamSource, cached
-    * per testdata dir (same lifecycle as [[stagedEvents]]). seq is the
-    * change-log order; keys may appear in both waves. */
-  private val stagedCdcFeedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-
+    * per testdata dir. seq is the change-log order; keys may appear in
+    * both waves. */
   private def stagedCdcFeed(spark: SparkSession, dir: String): String = {
     val money = DecimalType(12, 2)
-    stagedCdcFeedDirs.computeIfAbsent(dir, _ => {
-      val p = QueriesRelational.tempDirCleanedOnExit("graft-cdc-feed")
+    graft.ops.Staging.perJvm("graft-cdc-feed", dir) { p =>
       val cust = Tables.customer(spark, dir).select(col("c_custkey"),
         col("c_name"), col("c_acctbal").cast(money).as("c_acctbal"))
       val base = cust.filter(pmod(col("c_custkey"), lit(10)) =!= 7)
@@ -330,8 +314,7 @@ object QueriesStreaming {
         .withColumn("op", lit("U"))
         .withColumn("seq", lit(2))
       w1.unionByName(w2).write.mode("overwrite").parquet(p.toString)
-      p
-    }).toString
+    }.toString
   }
 
   val q81Oracle: String =
@@ -369,7 +352,7 @@ object QueriesStreaming {
     * prune by day for free); the drain itself is stateless (no
     * aggregation state), so partitions size to the write parallelism. */
   def q84_stream_partitioned_sink(spark: SparkSession, dir: String): DataFrame = {
-    val out = QueriesRelational.tempDirCleanedOnExit("graft-psink").toString
+    val out = graft.ops.Staging.tempDirCleanedOnExit("graft-psink").toString
     val src = eventsStream(spark, dir)
       // tz-INDEPENDENT partition day (the 816a44c convention): integer
       // epoch-day arithmetic on ts_us, never to_date(ts_t) — which would

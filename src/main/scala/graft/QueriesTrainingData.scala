@@ -2093,29 +2093,18 @@ object QueriesTrainingData {
 
   /** x06's scored near-dup pairs behind content-keyed staging — the
     * production shape for every AUDIT over the near-dup relation: the
-    * minhash+LSH+verify pipeline runs once per (dataset content, LSH
-    * params) and lands as a bucketed parquet staging (the q50/x45
-    * `ops.Bucketing.ensureStaged` lifecycle: atomic publish, catalog-loss
-    * recovery, stale-generation cleanup); each downstream audit is then
+    * minhash+LSH+verify pipeline runs once per (dataset content, build
+    * — LSH params included) and lands as a bucketed parquet staging
+    * ([[graft.ops.Staging.table]]: atomic publish, catalog-loss recovery,
+    * stale-generation cleanup); each downstream audit is then
     * one scan + aggregate over id-pair rows. At 100 TB this converts
     * every additional integrity report from a full corpus re-shingle
     * into a read of the (tiny: candidate survivors only) pair frame.
     * Bucketed by `doc_a` so pair-graph joins back to per-doc frames can
     * co-locate without an exchange on the staged side. */
-  def stagedLshScoredPairs(spark: SparkSession, dir: String): DataFrame = {
-    // key = dataset content + LSH params: changed data OR changed
-    // signature geometry must restage, never silently reuse
-    val key = "b2r4s3_" + graft.ops.Bucketing.datasetKey(dir, Seq("documents.parquet"))
-    val stage = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_lshpairs_$key")
-    graft.ops.Bucketing.cleanupStale(stage.getParentFile, dir, stage.getName,
-      prefix = "graft_lshpairs_")
-    graft.ops.Bucketing.writeSourceMarker(stage, dir)
-    graft.ops.Bucketing.ensureStaged(spark,
-      x06_dedup_minhash_lsh(spark, dir),
-      s"graft_lsh_pairs_$key", new java.io.File(stage, "pairs").getAbsolutePath,
-      8, "doc_a")
-  }
+  def stagedLshScoredPairs(spark: SparkSession, dir: String): DataFrame =
+    graft.ops.Staging.table(spark, "lsh_pairs", dir, Seq("documents.parquet"),
+      8, "doc_a")(x06_dedup_minhash_lsh(spark, dir))
 
   /** Split-leakage audit — measures the contamination x36 exists to
     * prevent: take the near-dup pairs ([[stagedLshScoredPairs]],
@@ -2397,34 +2386,25 @@ object QueriesTrainingData {
   /** x40's snapshot diff with ZERO exchanges — the nightly-diff shape a
     * long-lived corpus should actually run: each generation's
     * fingerprint index is MATERIALIZED bucketed by doc id at ingest
-    * (`ops.Bucketing.ensureStaged` — the q50 lifecycle: content-keyed
-    * staging, catalog-loss recovery, stale cleanup), so the full-outer
+    * ([[graft.ops.Staging.table]] — keyed on data and code, catalog-loss
+    * recovery, stale cleanup), so the full-outer
     * diff join co-locates by bucket and the plan contains no Exchange at
     * all. At 100 TB that converts the diff from a 2×-corpus-fingerprint
     * shuffle into a per-bucket merge — the write-once/diff-nightly
     * amortization. Output ≡ x40 (same oracle); the zero-Exchange plan is
     * asserted in PlanShapeSpec. */
   def x45_bucketed_snapshot_diff(spark: SparkSession, dir: String): DataFrame = {
-    val key = graft.ops.Bucketing.datasetKey(dir, Seq("documents.parquet"))
-    val stage = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_diffstage_$key")
-    graft.ops.Bucketing.cleanupStale(stage.getParentFile, dir, stage.getName,
-      prefix = "graft_diffstage_")
-    graft.ops.Bucketing.writeSourceMarker(stage, dir)
-    val (oldT, newT) = (s"graft_b_docs_old_$key", s"graft_b_docs_new_$key")
     val d = documents(spark, dir)
-    graft.ops.Bucketing.ensureStaged(spark,
-      d.filter(pmod(col("doc_id"), lit(10)) =!= 7)
-        .select(col("doc_id"), TextOps.fingerprint64(col("text")).as("fp")),
-      oldT, new java.io.File(stage, "old").getAbsolutePath, 8, "doc_id")
-    graft.ops.Bucketing.ensureStaged(spark,
-      d.filter(pmod(col("doc_id"), lit(10)) =!= 3)
-        .select(col("doc_id"), TextOps.fingerprint64(
-          when(pmod(col("doc_id"), lit(5)) === 0, concat(col("text"), lit(" rev2")))
-            .otherwise(col("text"))).as("fp")),
-      newT, new java.io.File(stage, "new").getAbsolutePath, 8, "doc_id")
-    graft.text.CorpusOps.snapshotDiff(
-        spark.table(oldT), spark.table(newT), "doc_id", "fp")
+    def staged(generation: String)(build: => DataFrame): DataFrame =
+      graft.ops.Staging.table(spark, s"diffstage_$generation", dir,
+        Seq("documents.parquet"), 8, "doc_id")(build)
+    val oldT = staged("old")(d.filter(pmod(col("doc_id"), lit(10)) =!= 7)
+      .select(col("doc_id"), TextOps.fingerprint64(col("text")).as("fp")))
+    val newT = staged("new")(d.filter(pmod(col("doc_id"), lit(10)) =!= 3)
+      .select(col("doc_id"), TextOps.fingerprint64(
+        when(pmod(col("doc_id"), lit(5)) === 0, concat(col("text"), lit(" rev2")))
+          .otherwise(col("text"))).as("fp")))
+    graft.text.CorpusOps.snapshotDiff(oldT, newT, "doc_id", "fp")
       .filter(col("status") =!= "unchanged")
   }
 
@@ -2546,26 +2526,18 @@ object QueriesTrainingData {
   /** x11's IVF search through a PERSISTED index — the train-once /
     * probe-nightly amortization: the first run fits the quantizer and
     * writes (centroids, cell-partitioned assignments) under a
-    * content-keyed staging dir (the q50 lifecycle); every later run —
+    * content-keyed staging dir ([[graft.ops.Staging.files]]); every later run —
     * including bench iterations 2+ and fresh sessions over the same
     * data — loads and searches with NO KMeans fit, and a sub-full probe
     * opens only its nProbe cells' files (partition pruning,
     * spec-asserted). Gate runs the full probe, so the result is exact —
     * the same brute-force oracle as x11. */
   def x48_ann_ivf_persisted(spark: SparkSession, dir: String): DataFrame = {
-    val key = graft.ops.Bucketing.datasetKey(dir, Seq("embeddings.parquet"))
-    val stage = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_ivf_$key")
-    graft.ops.Bucketing.cleanupStale(stage.getParentFile, dir, stage.getName,
-      prefix = "graft_ivf_")
-    val built = new java.io.File(stage, "_built")
-    if (!built.exists()) {
-      graft.ops.Bucketing.writeSourceMarker(stage, dir)
+    val stage = graft.ops.Staging.files("ivf", dir, Seq("embeddings.parquet")) { out =>
       val emb = embeddings(spark, dir)
         .repartition(spark.sparkContext.defaultParallelism)
       val model = graft.sim.IvfIndex.build(emb, "vec_id", "embedding", k = 16)
-      graft.sim.IvfIndex.save(model, stage.getAbsolutePath)
-      built.createNewFile(): Unit
+      graft.sim.IvfIndex.save(model, out.getAbsolutePath)
     }
     val model = graft.sim.IvfIndex.load(spark, stage.getAbsolutePath)
     graft.sim.IvfIndex.search(spark, model,
@@ -2588,20 +2560,12 @@ object QueriesTrainingData {
     * projection); the search join shuffles on `cell`, never the cross
     * product; re-clustering cost is amortized to zero per batch. */
   def x85_ivf_delta_append(spark: SparkSession, dir: String): DataFrame = {
-    val key = graft.ops.Bucketing.datasetKey(dir, Seq("embeddings.parquet"))
-    val stage = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_ivfd_$key")
-    graft.ops.Bucketing.cleanupStale(stage.getParentFile, dir, stage.getName,
-      prefix = "graft_ivfd_")
-    val built = new java.io.File(stage, "_built")
-    if (!built.exists()) {
-      graft.ops.Bucketing.writeSourceMarker(stage, dir)
+    val stage = graft.ops.Staging.files("ivfd", dir, Seq("embeddings.parquet")) { out =>
       val base = embeddings(spark, dir)
         .filter(pmod(col("vec_id"), lit(10L)) =!= 7)
         .repartition(spark.sparkContext.defaultParallelism)
       val model = graft.sim.IvfIndex.build(base, "vec_id", "embedding", k = 16)
-      graft.sim.IvfIndex.save(model, stage.getAbsolutePath)
-      built.createNewFile(): Unit
+      graft.sim.IvfIndex.save(model, out.getAbsolutePath)
     }
     val model = graft.sim.IvfIndex.load(spark, stage.getAbsolutePath)
     val delta = embeddings(spark, dir)
@@ -3343,18 +3307,9 @@ object QueriesTrainingData {
     * vocabulary instead of re-exploding the token stream. Bucketed and
     * bucket-sorted on `w` so corpus-token → vocabulary joins co-locate
     * without an exchange on the staged side (the q50/x45 machinery). */
-  def stagedWordFreq(spark: SparkSession, dir: String): DataFrame = {
-    val key = "wf8w_" + graft.ops.Bucketing.datasetKey(dir, Seq("documents.parquet"))
-    val stage = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_wordfreq_$key")
-    graft.ops.Bucketing.cleanupStale(stage.getParentFile, dir, stage.getName,
-      prefix = "graft_wordfreq_")
-    graft.ops.Bucketing.writeSourceMarker(stage, dir)
-    graft.ops.Bucketing.ensureStaged(spark,
-      graft.text.Bpe.wordFrequency(documents(spark, dir)),
-      s"graft_wordfreq_$key", new java.io.File(stage, "wf").getAbsolutePath,
-      8, "w")
-  }
+  def stagedWordFreq(spark: SparkSession, dir: String): DataFrame =
+    graft.ops.Staging.table(spark, "wordfreq", dir, Seq("documents.parquet"),
+      8, "w")(graft.text.Bpe.wordFrequency(documents(spark, dir)))
 
   /** BPE merge APPLY — closes the tokenization loop x55 opened: learn the
     * top-24 merge ranks from the staged vocabulary's pair statistics
@@ -5559,25 +5514,16 @@ object QueriesTrainingData {
     * ADC ranking is deterministic (adc_dist, neighbor_id), so a prefix
     * of the top-100 IS the top-5/top-10. The coarser frontier configs
     * stage at 5 (no deeper consumer). A tuning rerun costs a scan, not
-    * a pipeline; the stale-cleanup prefix carries the config tag +
-    * depth so sibling stagings never evict each other. */
+    * a pipeline; the family carries the config tag + depth so sibling
+    * stagings never evict each other. */
   private def stagedAdcTopK(spark: SparkSession, dir: String, tag: String,
       m: Int, sd: Int, ncw: Int): DataFrame = {
     val k = if (tag == "m32_d2_k64") 100 else 5
-    val key = s"${tag}_k${k}_" +
-      graft.ops.Bucketing.datasetKey(dir, Seq("embeddings.parquet"))
-    val prefix = s"graft_adc_${tag}_k${k}_"
-    val stage = new java.io.File(
-      System.getProperty("java.io.tmpdir"), prefix + key)
-    graft.ops.Bucketing.cleanupStale(stage.getParentFile, dir, stage.getName,
-      prefix = prefix)
-    graft.ops.Bucketing.writeSourceMarker(stage, dir)
-    graft.ops.Bucketing.ensureStaged(spark,
+    graft.ops.Staging.table(spark, s"adc_${tag}_k$k", dir,
+        Seq("embeddings.parquet"), 4, "query_id")(
       graft.sim.PqIndex.adcTopK(embeddings(spark, dir), "vec_id",
         "embedding", queryPred = col("vec_id") < 10, k = k,
-        m = m, subDim = sd, nCw = ncw),
-      s"graft_adc_topk_$key",
-      new java.io.File(stage, "topk").getAbsolutePath, 4, "query_id")
+        m = m, subDim = sd, nCw = ncw))
   }
 
   /** Content-keyed staging of the EXACT integer-L2 top-5 ground truth
@@ -5588,14 +5534,8 @@ object QueriesTrainingData {
     * the table, never N×N. */
   def stagedExactTop5(spark: SparkSession, dir: String): DataFrame = {
     import graft.sim.SimilarityOps
-    val key = "l2top5_" +
-      graft.ops.Bucketing.datasetKey(dir, Seq("embeddings.parquet"))
-    val stage = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_exacttop5_$key")
-    graft.ops.Bucketing.cleanupStale(stage.getParentFile, dir, stage.getName,
-      prefix = "graft_exacttop5_")
-    graft.ops.Bucketing.writeSourceMarker(stage, dir)
-    def build: DataFrame = {
+    graft.ops.Staging.table(spark, "exact_top5", dir, Seq("embeddings.parquet"),
+        4, "query_id") {
       val qv = embeddings(spark, dir).select(col("vec_id"),
         SimilarityOps.quantize(col("embedding")).as("qv"))
       qv.filter(col("vec_id") < 10).toDF("query_id", "qa")
@@ -5610,9 +5550,6 @@ object QueriesTrainingData {
         .filter(col("rnk") <= 5)
         .select(col("query_id"), col("neighbor_id"))
     }
-    graft.ops.Bucketing.ensureStaged(spark, build,
-      s"graft_exact_top5_$key",
-      new java.io.File(stage, "top5").getAbsolutePath, 4, "query_id")
   }
 
   /** Content-keyed staging of the bigram term-frequency table
@@ -5628,23 +5565,13 @@ object QueriesTrainingData {
     * explode alone multiplies the corpus by the mean bigram count,
     * the single most expensive map in this plane. */
   private[graft] def stagedBigramTf(spark: SparkSession,
-      dir: String): DataFrame = {
-    val key = "bigramtf_" +
-      graft.ops.Bucketing.datasetKey(dir, Seq("documents.parquet"))
-    val stage = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_bigramtf_$key")
-    graft.ops.Bucketing.cleanupStale(stage.getParentFile, dir, stage.getName,
-      prefix = "graft_bigramtf_")
-    graft.ops.Bucketing.writeSourceMarker(stage, dir)
-    def build: DataFrame = documents(spark, dir)
+      dir: String): DataFrame =
+    graft.ops.Staging.table(spark, "bigram_tf", dir, Seq("documents.parquet"),
+        4, "term")(documents(spark, dir)
       .select(col("doc_id"),
         explode(TextOps.ngrams(TextOps.tokens(col("text")), 2)).as("term"))
       .groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-    graft.ops.Bucketing.ensureStaged(spark, build,
-      s"graft_bigram_tf_$key",
-      new java.io.File(stage, "tf").getAbsolutePath, 4, "term")
-  }
+      .agg(count(lit(1)).as("tf")))
 
   /** The shared doc-to-doc BM25 sparse leg over [[stagedBigramTf]]
     * (x113 consumes k = 10, x120 k = 5): query docs (doc_id < 10)

@@ -1,7 +1,6 @@
 package graft
 
 import graft.sim.PqIndex
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only component timer for x109_ivf_pq (round-19 measurement):
@@ -10,15 +9,7 @@ import org.apache.spark.sql.functions._
 object X109Probe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "1048576")
-      .config("spark.sql.files.openCostInBytes", "65536")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession("32")
     spark.sparkContext.setLogLevel("WARN")
     def time[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f

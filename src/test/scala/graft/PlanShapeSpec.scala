@@ -304,6 +304,10 @@ class PlanShapeSpec extends AnyFunSuite {
       Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L))
   }
 
+  /** One of q50's two staged tables: its dir, named like its table. */
+  private def q50Stage(table: String): java.io.File =
+    graft.ops.Staging.location(s"bucketed_$table", sf, Seq(s"$table.parquet"))
+
   test("q50: bucketed-staged join plans with ZERO exchange (co-located)") {
     // force the sort-merge path (no broadcast) to prove the bucket layout
     // alone co-locates the join — the property that removes the per-run
@@ -312,9 +316,9 @@ class PlanShapeSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       QueriesRelational.q50_bucketed_join(spark, sf).count() // stages tables
-      val (lTable, oTable, _) = QueriesRelational.q50StagingNames(sf)
       val join = graft.ops.Bucketing.bucketedJoin(
-        spark, lTable, oTable, "l_orderkey", "o_orderkey")
+        spark.table(q50Stage("lineitem").getName),
+        spark.table(q50Stage("orders").getName), "l_orderkey", "o_orderkey")
       val plan = join.queryExecution.executedPlan.toString
       assert(plan.contains("SortMergeJoin"))
       assert(!plan.contains("Exchange"), s"bucketed join still shuffles:\n$plan")
@@ -323,13 +327,14 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("q50: staged files survive catalog loss — fresh app reuses them metadata-only") {
     // simulate a NEW application over unchanged data: same staged files on
-    // disk, empty catalog. ensureStaged must register an external bucketed
+    // disk, empty catalog. Staging.table must register an external bucketed
     // table over the existing files (no rewrite) and the join must still
     // plan with zero Exchange and produce the same rows.
     val before = QueriesRelational.q50_bucketed_join(spark, sf)
       .collect().map(_.toSeq).toSet
-    val (lTable, oTable, stage) = QueriesRelational.q50StagingNames(sf)
-    val lMtime = new java.io.File(stage, "lineitem/_SUCCESS").lastModified
+    val (stage, oStage) = (q50Stage("lineitem"), q50Stage("orders"))
+    val (lTable, oTable) = (stage.getName, oStage.getName)
+    val lMtime = new java.io.File(stage, "_SUCCESS").lastModified
     spark.sql(s"DROP TABLE IF EXISTS `$lTable`")
     spark.sql(s"DROP TABLE IF EXISTS `$oTable`")
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -338,9 +343,9 @@ class PlanShapeSpec extends AnyFunSuite {
       val after = QueriesRelational.q50_bucketed_join(spark, sf)
       assert(after.collect().map(_.toSeq).toSet === before)
       // staged data was NOT rewritten (metadata-only re-registration)
-      assert(new java.io.File(stage, "lineitem/_SUCCESS").lastModified === lMtime)
+      assert(new java.io.File(stage, "_SUCCESS").lastModified === lMtime)
       val join = graft.ops.Bucketing.bucketedJoin(
-        spark, lTable, oTable, "l_orderkey", "o_orderkey")
+        spark.table(lTable), spark.table(oTable), "l_orderkey", "o_orderkey")
       val plan = join.queryExecution.executedPlan.toString
       assert(plan.contains("SortMergeJoin"))
       assert(!plan.contains("Exchange"), s"reused bucketed join shuffles:\n$plan")
@@ -352,25 +357,53 @@ class PlanShapeSpec extends AnyFunSuite {
     // on-disk layout marker no longer matches the current schema/buckets —
     // reuse would plan a bucketed read over mismatched files
     QueriesRelational.q50_bucketed_join(spark, sf).count()
-    val (lTable, oTable, stage) = QueriesRelational.q50StagingNames(sf)
-    val marker = new java.io.File(stage, "lineitem/_graft_layout")
+    val (stage, oStage) = (q50Stage("lineitem"), q50Stage("orders"))
+    val marker = new java.io.File(stage, "_graft_layout")
     assert(marker.isFile, "staging must record its layout")
     java.nio.file.Files.write(marker.toPath, "stale-layout".getBytes)
-    val dataMtime = new java.io.File(stage, "lineitem/_SUCCESS").lastModified
-    spark.sql(s"DROP TABLE IF EXISTS `$lTable`")
-    spark.sql(s"DROP TABLE IF EXISTS `$oTable`")
+    val dataMtime = new java.io.File(stage, "_SUCCESS").lastModified
+    spark.sql(s"DROP TABLE IF EXISTS `${stage.getName}`")
+    spark.sql(s"DROP TABLE IF EXISTS `${oStage.getName}`")
     QueriesRelational.q50_bucketed_join(spark, sf).count()
     // restaged: fresh files, marker rewritten to the current layout
     assert(new String(java.nio.file.Files.readAllBytes(marker.toPath)) != "stale-layout")
-    assert(new java.io.File(stage, "lineitem/_SUCCESS").lastModified >= dataMtime)
+    assert(new java.io.File(stage, "_SUCCESS").lastModified >= dataMtime)
+  }
+
+  test("q50: staged files built by DIFFERENT code are restaged in place") {
+    // simulate files an older build of the program staged: same dataset
+    // key, same schema and bucketing, only the code identity differs —
+    // the case a schema-only layout check silently reused
+    QueriesRelational.q50_bucketed_join(spark, sf).count()
+    val (stage, oStage) = (q50Stage("lineitem"), q50Stage("orders"))
+    val marker = new java.io.File(stage, "_graft_layout")
+    val current = new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8")
+    val code = current.linesIterator.find(_.startsWith("code=")).getOrElse("")
+    assert(code.length > "code=".length, s"layout marker records no code identity:\n$current")
+    java.nio.file.Files.write(marker.toPath,
+      current.replace(code, "code=older-build").getBytes("UTF-8"))
+    val olderFile = new java.io.File(stage, "_older_build_file")
+    assert(olderFile.createNewFile())
+    spark.sql(s"DROP TABLE IF EXISTS `${stage.getName}`")
+    spark.sql(s"DROP TABLE IF EXISTS `${oStage.getName}`")
+    QueriesRelational.q50_bucketed_join(spark, sf).count()
+    // restaged: the older build's dir was replaced, marker is current again
+    assert(!olderFile.exists, "files staged by a different build were reused")
+    assert(new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") === current)
   }
 
   test("q50: staging for a changed dataset replaces the stale staging dir") {
     // a stale sibling staging for the SAME dataset (different content key)
-    // must be deleted by the next run — tmpdir holds one staging per dataset
-    val (_, _, stage) = QueriesRelational.q50StagingNames(sf)
-    val stale = new java.io.File(stage.getParentFile, "graft_bucketed_deadbeef00000000")
-    graft.ops.Bucketing.writeSourceMarker(stale, sf)
+    // must be deleted by the next run — tmpdir holds one staging per dataset.
+    // A changed dataset always misses the catalog, so drop the live table
+    QueriesRelational.q50_bucketed_join(spark, sf).count()
+    val stage = q50Stage("lineitem")
+    val stale = new java.io.File(stage.getParentFile, "graft_bucketed_lineitem_deadbeef00000000")
+    stale.mkdirs()
+    java.nio.file.Files.copy(new java.io.File(stage, "_graft_layout").toPath,
+      new java.io.File(stale, "_graft_layout").toPath,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    spark.sql(s"DROP TABLE IF EXISTS `${stage.getName}`")
     QueriesRelational.q50_bucketed_join(spark, sf).count()
     assert(!stale.exists, "stale staging dir for the same dataset not cleaned up")
     assert(stage.exists)

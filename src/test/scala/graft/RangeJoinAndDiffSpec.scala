@@ -100,29 +100,35 @@ class RangeJoinAndDiffSpec extends AnyFunSuite {
   }
 
   // ------------------------------------------------- staging-family cleanup
-  test("cleanupStale scopes to its prefix family — never another family's staging") {
+  test("stale cleanup deletes only its own (family, source) generations") {
     val root = java.nio.file.Files.createTempDirectory("graft-clean-spec").toFile
-    try {
-      def mk(name: String, src: String): java.io.File = {
-        val d = new java.io.File(root, name)
-        graft.ops.Bucketing.writeSourceMarker(d, src)
-        d
-      }
-      val staleDiff = mk("graft_diffstage_old", "/data/a")
-      val liveDiff = mk("graft_diffstage_new", "/data/a")
-      val otherFamily = mk("graft_ivf_old", "/data/a")     // same source, other family
-      val otherSource = mk("graft_diffstage_b", "/data/b") // same family, other source
-      graft.ops.Bucketing.cleanupStale(root, "/data/a", "graft_diffstage_new",
-        prefix = "graft_diffstage_")
-      assert(!staleDiff.exists(), "stale same-family dir survived")
-      assert(liveDiff.exists() && otherFamily.exists() && otherSource.exists(),
-        "cleanup crossed its family or source boundary")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(root)
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
     }
+    def source(name: String, content: String): String = {
+      val d = new java.io.File(root, name)
+      d.mkdirs()
+      java.nio.file.Files.write(new java.io.File(d, "t").toPath, content.getBytes)
+      d.getPath
+    }
+    val family = s"cleanspec${System.nanoTime}"
+    def mk(fam: String, src: String): java.io.File =
+      graft.ops.Staging.files(fam, src, Seq("t")) { out => out.mkdirs(); () }
+    val (a, b) = (source("a", "a1"), source("b", "b1"))
+    val staleDiff = mk(family, a)
+    // same source, other family — its name extends this family's prefix
+    val otherFamily = mk(family + "_ivf", a)
+    val otherSource = mk(family, b) // same family, other source
+    try {
+      source("a", "a2 changed") // new content key: a new generation of (family, a)
+      val liveDiff = mk(family, a)
+      try {
+        assert(liveDiff !== staleDiff)
+        assert(!staleDiff.exists(), "stale same-family dir survived")
+        assert(liveDiff.exists() && otherFamily.exists() && otherSource.exists(),
+          "cleanup crossed its family or source boundary")
+      } finally rm(liveDiff)
+    } finally Seq(staleDiff, otherFamily, otherSource, root).foreach(rm)
   }
 
   // --------------------------------------------------------- semanticDedup

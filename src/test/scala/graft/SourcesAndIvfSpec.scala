@@ -208,11 +208,9 @@ class SourcesAndIvfSpec extends AnyFunSuite {
   test("x48: persisted IVF staging reuses — second call never rebuilds (no KMeans)") {
     val sf = "/root/testdata/sf0.001"
     SparkEntry.queries("x48_ann_ivf_persisted")(spark, sf).count(): Unit
-    val key = graft.ops.Bucketing.datasetKey(sf, Seq("embeddings.parquet"))
-    val stage = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_ivf_$key")
-    val built = new java.io.File(stage, "_built")
-    assert(built.exists(), "first call must leave the _built marker")
+    val stage = graft.ops.Staging.location("ivf", sf, Seq("embeddings.parquet"))
+    val built = new java.io.File(stage, "_graft_layout")
+    assert(built.exists(), "first call must leave the layout marker")
     def mtimes() = {
       def walk(f: java.io.File): Seq[(String, Long)] =
         if (f.isDirectory)
@@ -407,9 +405,7 @@ class SourcesAndIvfSpec extends AnyFunSuite {
         pmod(col("neighbor_id"), lit(10L)) =!= 7).count() === 0)
       // the assign path is the KMeans L2 rule: every delta vector lands
       // in the cell of its nearest centroid
-      val key = graft.ops.Bucketing.datasetKey(sf, Seq("embeddings.parquet"))
-      val stage = new java.io.File(
-        System.getProperty("java.io.tmpdir"), s"graft_ivfd_$key")
+      val stage = graft.ops.Staging.location("ivfd", sf, Seq("embeddings.parquet"))
       val model = graft.sim.IvfIndex.load(spark, stage.getAbsolutePath)
       val delta = Tables.embeddings(spark, sf)
         .filter(pmod(col("vec_id"), lit(10L)) === 7)
